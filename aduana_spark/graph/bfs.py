@@ -17,11 +17,32 @@ frontier against the edge table instead of the full vertex state.
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from aduana_spark.graph.pagerank import _derived_superstep_partitions
+from aduana_spark.graph.superstep import Supersteps, edge_layout, superstep_scope
+
+
+def _expand(d: Supersteps, edges: DataFrame, level: tuple, depth: int):
+    """One superstep: ``level`` is (state, frontier); returns the next
+    level, the number of vertices first reached at ``depth``, and
+    whether there were none."""
+    state, frontier = level
+    reached = (
+        edges.join(frontier.select(F.col("id").alias("src")), "src")
+        .select(F.col("dst").alias("id"))
+        .distinct()
+    )
+    frontier = d.local(
+        reached.join(state.select("id"), "id", "left_anti").select(
+            "id", F.lit(depth).alias("depth")
+        )
+    )
+    n = frontier.count()  # fills the frontier checkpoint
+    state = d.local(state.unionAll(frontier), eager=True)
+    return (state, frontier), n, n == 0
 
 
 def bfs_depths(
@@ -29,44 +50,14 @@ def bfs_depths(
 ) -> DataFrame:
     """Shortest-path depth from ``seeds`` (DataFrame with column
     ``id``). Returns (id, depth) for reachable vertices only."""
-    spark = edges.sparkSession
-    e = edges.select("src", "dst").repartition(F.col("src")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    n_edges = e.count()
-
-    # scale-adaptive loop width (pagerank._derived_superstep_partitions):
-    # narrow the per-superstep exchanges for small graphs; session value
-    # restored at exit, the cached E-row layout above is untouched
-    restore_parts: str | None = None
-    dp = _derived_superstep_partitions(spark, n_edges)
-    if dp:
-        restore_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(dp))
-    state = seeds.select("id", F.lit(0).alias("depth")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    frontier = state
-    depth = 0
-    while True:
-        depth += 1
-        if max_depth is not None and depth > max_depth:
-            break
-        reached = (
-            e.join(frontier.select(F.col("id").alias("src")), "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
+    with superstep_scope("bfs", edge_layout(edges)) as d:
+        (e,) = d.edges
+        state = d.cache(seeds.select("id", F.lit(0).alias("depth")))
+        res = d.run(
+            (state, state),
+            lambda level, depth: _expand(d, e, level, depth),
+            max_depth if max_depth is not None else sys.maxsize,
+            n_vertices=0,
         )
-        new_frontier = (
-            reached.join(state.select("id"), "id", "left_anti")
-            .select("id", F.lit(depth).alias("depth"))
-            .localCheckpoint()  # materialize + truncate lineage
-        )
-        if new_frontier.count() == 0:
-            break
-        new_state = state.unionAll(new_frontier).localCheckpoint()
-        state.unpersist()
-        state, frontier = new_state, new_frontier
-    if restore_parts is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", restore_parts)
-    return state
+        res.ranks = res.ranks[0]
+        return res.ranks

@@ -97,12 +97,9 @@ def test_superstep_plan_has_no_edge_side_sort(spark, flow):
     *_, edges = flow
     from pyspark.storagelevel import StorageLevel
 
-    e = (
-        edges.select("src", "dst")
-        .repartition(F.col("src"))
-        .sortWithinPartitions("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    from aduana_spark.graph.superstep import edge_layout
+
+    e = edge_layout(edges).persist(StorageLevel.MEMORY_AND_DISK)
     e.count()
     state = (
         e.select(F.col("src").alias("id"))
